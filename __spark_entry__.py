@@ -57,21 +57,6 @@ def _index(spark: SparkSession, sf_dir: str):
     return _INDEX_CACHE[sf_dir]
 
 
-def _blocked_index(spark: SparkSession, sf_dir: str):
-    key = ("blocked", sf_dir)
-    if key not in _INDEX_CACHE:
-        from nexlt_spark.index.blocks import BlockedIndex, build_blocks
-
-        idx = _index(spark, sf_dir)
-        _INDEX_CACHE[key] = BlockedIndex(
-            blocks=build_blocks(idx).persist(),
-            doc_stats=idx.doc_stats,
-            term_stats=idx.term_stats,
-            stats=idx.stats,
-        )
-    return _INDEX_CACHE[key]
-
-
 def _attr_store(spark: SparkSession, sf_dir: str):
     """On-disk packed store + doc_attrs sidecar (cached per sf): the
     serving shape the r5 attr-filtered driver WAND and driver phrase
@@ -256,8 +241,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def _bm25_wand(s, d):  # P14 Block-Max WAND fast path ≡ exact BM25
         from nexlt_spark.query.wand import wand_topk
 
-        bidx = _blocked_index(s, d)
-        top = wand_topk(bidx, ["spark", "join"], k=10, mode="or")
+        top = wand_topk(_ranged_index(s, d), ["spark", "join"], k=10, mode="or")
         return top.select("doc_id", F.round("score", 6).alias("score"))
 
     q["bm25_wand_or"] = _bm25_wand

@@ -109,8 +109,8 @@ def main():
     turns_per_sec = n_turns / build_sec
 
     # blocked (compressed, block-max) postings via the packed scale-path
-    # builder: ranged=True, so WAND's rescore and the q_ranged_* shapes
-    # run the per-range fused kernel (query/ranged.py) — the serving plan
+    # builder (ranged, like every BlockedIndex), so WAND's rescore and the
+    # q_ranged_* shapes run the per-range fused kernel (query/ranged.py) — the serving plan
     bidx = build_blocked_direct(documents, positions=True)
     bidx.blocks = bidx.blocks.persist()
     bidx.blocks.count()

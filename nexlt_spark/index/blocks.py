@@ -5,11 +5,13 @@ Physical layout (SURVEY.md M3 / north_star):
 - one DataFrame row per posting **block** (≤128 postings): docID-sorted,
   delta+varint doc_ids, varint tfs/dls, per-block max tf_norm — the
   Lucene segment/skip-list analog, re-expressed as a columnar table;
-- **hot-term salting**: terms with df > salt_threshold are split into
+- **uniform range partitioning**: every term's postings are split into
   doc_id-range runs (rsalt = doc_id >> range_shift) BEFORE the
   groupBy(term, rsalt).applyInPandas encode, so no single task ever
   holds a full Zipf-head posting list (SURVEY.md P6 — the reference's
-  per-language threads are the hand-rolled version of this);
+  per-language threads are the hand-rolled version of this) and a
+  doc's postings for EVERY term share one rsalt group — the invariant
+  the per-range kernels (query.ranged, the fused WAND) score under;
   ranges are disjoint ⇒ the global list is the rsalt-ordered
   concatenation, no second merge pass needed;
 - on disk: parquet partitioned by term_bucket = pmod(xxhash64(term), B)
@@ -23,6 +25,7 @@ rows — numpy decode, no per-row Python.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import ClassVar
 
 import numpy as np
 import pandas as pd
@@ -50,8 +53,7 @@ BLOCKS_SCHEMA_POS = BLOCKS_SCHEMA + ", pos binary"
 DECODED_SCHEMA = "term string, doc_id long, tf int, dl int"
 DECODED_SCHEMA_POS = DECODED_SCHEMA + ", positions array<int>"
 
-DEFAULT_SALT_THRESHOLD = 100_000  # df above which a term is range-salted
-DEFAULT_RANGE_SHIFT = 16  # salted run ≈ 65k docIDs of range
+DEFAULT_RANGE_SHIFT = 16  # one doc range ≈ 65k docIDs
 
 
 def _encode_group(avgdl: float, block_size: int = BLOCK_SIZE, positions: bool = False):
@@ -86,41 +88,27 @@ def _encode_group(avgdl: float, block_size: int = BLOCK_SIZE, positions: bool = 
 
 def build_blocks(
     index: InvertedIndex,
-    salt_threshold: int = DEFAULT_SALT_THRESHOLD,
     range_shift: int = DEFAULT_RANGE_SHIFT,
     block_size: int = BLOCK_SIZE,
-    uniform_range: bool = False,
 ) -> DataFrame:
-    """Flat postings → blocked postings DataFrame (one row per block).
+    """Flat postings → blocked postings DataFrame (one row per block),
+    every term range-partitioned by rsalt = doc_id >> range_shift — the
+    layout every BlockedIndex is scored under.
 
     A positions-bearing flat index (build_index(positions=True)) yields
     positions-bearing blocks (extra per-block `pos` binary) — phrase
     queries then run off the blocked store too.
-
-    uniform_range=True range-partitions EVERY term (rsalt = doc_id >>
-    range_shift, no hot-term discovery job) — the invariant the
-    per-range fused scorer (query.ranged) requires; wrap the result in
-    BlockedIndex(ranged=True).
     """
-    p = index.postings
-    if uniform_range:
-        rsalt = F.shiftright(F.col("doc_id"), range_shift)
-    else:
-        hot = [
-            r["term"]
-            for r in index.term_stats.where(F.col("df") > salt_threshold).select("term").collect()
-        ]
-        if hot:
-            rsalt = F.when(
-                F.col("term").isin(hot), F.shiftright(F.col("doc_id"), range_shift)
-            ).otherwise(F.lit(0))
-        else:
-            rsalt = F.lit(0)
-    p = p.withColumn("rsalt", rsalt.cast("long"))
     with_pos = index.has_positions
-    return p.groupBy("term", "rsalt").applyInPandas(
-        _encode_group(index.stats.avgdl, block_size, with_pos),
-        schema=BLOCKS_SCHEMA_POS if with_pos else BLOCKS_SCHEMA,
+    return (
+        index.postings.withColumn(
+            "rsalt", F.shiftright(F.col("doc_id"), range_shift).cast("long")
+        )
+        .groupBy("term", "rsalt")
+        .applyInPandas(
+            _encode_group(index.stats.avgdl, block_size, with_pos),
+            schema=BLOCKS_SCHEMA_POS if with_pos else BLOCKS_SCHEMA,
+        )
     )
 
 
@@ -173,12 +161,20 @@ class BlockedIndex:
     Implements the same protocol the exact query path uses on
     InvertedIndex: stats, term_dfs(terms), lookup(terms).
 
-    ranged=True marks a store where EVERY term's postings are
-    range-partitioned by rsalt = doc_id >> range_shift (the packed
-    builder) — the precondition for the per-range fused scorer
-    (query.ranged). Flat-path stores salt only Zipf-head terms, so
-    they stay ranged=False and use the generic plan.
+    Every BlockedIndex is ranged: each term's postings are partitioned
+    by rsalt = doc_id >> range_shift (build_blocks, the packed builder),
+    so the per-range kernels (query.ranged, the fused WAND) score it.
+    ``ranged`` is a class constant, not a constructor field; callers
+    read it with ``getattr(index, "ranged", False)``, which is False for
+    the flat InvertedIndex and for ShardedIndex.
+
+    The driver serving caches (term metadata, skip data, θ probes,
+    decoded blocks) are created here, once per index object; their byte
+    budgets are read from query.wand on every eviction pass, so tests
+    that monkeypatch those module knobs reach existing caches too.
     """
+
+    ranged: ClassVar[bool] = True
 
     blocks: DataFrame
     doc_stats: DataFrame
@@ -186,7 +182,6 @@ class BlockedIndex:
     stats: IndexStats
     n_buckets: int | None = None
     analyzer: str = "standard"
-    ranged: bool = False
     # set by builders whose blocks DAG is ALREADY exchange-keyed in the
     # on-disk store layout (term_bucket, rsalt mod salt-files): lets
     # save_blocked skip its layout repartition and fuse encode + flush
@@ -222,17 +217,25 @@ class BlockedIndex:
         from collections import OrderedDict
 
         from nexlt_spark.lru import ByteLRU
+        from nexlt_spark.query import wand as W
 
         self._term_cache = ByteLRU(lambda: self._TERM_CACHE_MAX_BYTES)
         self._term_negs: OrderedDict = OrderedDict()
         self._term_negs_lock = threading.Lock()
+        # query.wand's driver caches: positive term metadata (byte LRU)
+        # plus a bounded FIFO of term-absent entries, per-term skip
+        # arrays, memoized θ probes, and decoded block payloads
+        self._term_meta_cache = ByteLRU(lambda: W._META_CACHE_MAX_BYTES)
+        self._term_meta_negs: OrderedDict = OrderedDict()
+        self._term_meta_negs_lock = threading.Lock()
+        self._skip_cache = ByteLRU(lambda: W._SKIP_CACHE_MAX_BYTES)
+        self._theta_probe_cache = ByteLRU(lambda: W._THETA_CACHE_MAX_BYTES)
+        self._decoded_block_cache = ByteLRU(lambda: W._BLOCK_CACHE_MAX_BYTES)
 
     @property
     def _decoded_block_bytes(self) -> int:
-        """Retained bytes in the decoded-block LRU (query.wand attaches
-        the cache lazily); kept as a property for telemetry and tests."""
-        c = getattr(self, "_decoded_block_cache", None)
-        return c.nbytes if c is not None else 0
+        """Retained bytes in the decoded-block LRU (telemetry and tests)."""
+        return self._decoded_block_cache.nbytes
 
     def persist(self) -> "BlockedIndex":
         self.blocks.persist()
@@ -318,30 +321,37 @@ def save_blocked_index(
     index: InvertedIndex,
     path: str,
     n_buckets: int = 32,
-    salt_threshold: int = DEFAULT_SALT_THRESHOLD,
     range_shift: int = DEFAULT_RANGE_SHIFT,
 ) -> None:
-    """Build flat-path blocks from an InvertedIndex and persist them.
+    """Build ranged blocks from an InvertedIndex and persist them.
 
-    Delegates to packed.save_blocked so the repo has ONE store writer
-    (the two copies had drifted: this one lacked the driver-side stats
-    write and the doc_stats coalesce); the on-disk layout is unchanged
-    and load_blocked_index reads either vintage."""
+    Delegates to packed.save_blocked so the repo has ONE store writer;
+    the store it writes is the one load_blocked_index reads."""
     from nexlt_spark.index.packed import save_blocked
 
     bidx = BlockedIndex(
-        blocks=build_blocks(index, salt_threshold, range_shift),
+        blocks=build_blocks(index, range_shift),
         doc_stats=index.doc_stats,
         term_stats=index.term_stats,
         stats=index.stats,
         analyzer=index.analyzer,
-        ranged=False,
     )
     save_blocked(bidx, path, n_buckets=n_buckets)
 
 
 def load_blocked_index(spark: SparkSession, path: str) -> BlockedIndex:
+    """Open an on-disk store. Stores written before every blocked layout
+    was ranged (stats ``ranged`` false or absent) hold hot-term-salted
+    postings the per-range kernels would mis-score — AND queries would
+    silently miss docs whose terms landed in different rsalt groups —
+    so they are refused; rebuild them with save_blocked_index or
+    packed.save_blocked."""
     st = spark.read.parquet(f"{path}/stats").collect()[0]
+    if "ranged" not in st.__fields__ or not st["ranged"]:
+        raise ValueError(
+            f"blocked store at {path} uses the retired non-ranged layout; "
+            "rebuild it (save_blocked_index or packed.save_blocked)"
+        )
     return BlockedIndex(
         blocks=spark.read.parquet(f"{path}/postings_blocks"),
         doc_stats=spark.read.parquet(f"{path}/doc_stats"),
@@ -349,6 +359,5 @@ def load_blocked_index(spark: SparkSession, path: str) -> BlockedIndex:
         stats=IndexStats(n_docs=st["n_docs"], total_tokens=st["total_tokens"]),
         n_buckets=st["n_buckets"],
         analyzer=st["analyzer"] if "analyzer" in st.__fields__ else "standard",
-        ranged=bool(st["ranged"]) if "ranged" in st.__fields__ else False,
         store_path=path,
     )

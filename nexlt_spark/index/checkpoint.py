@@ -18,7 +18,7 @@ Layout under ``path``::
                                 analog)
     manifest/chunk-K.json       atomic done-marker + per-chunk metrics
     index/...                   final merged blocked index
-                                (save_blocked_index layout)
+                                (the ranged save_blocked_index store)
     lineage.json                build_id, per-chunk lineage rows, and
                                 the global stats snapshot (N, avgdl)
                                 frozen at merge time
@@ -46,7 +46,6 @@ from pyspark.sql import functions as F
 
 from nexlt_spark.index.blocks import (
     DEFAULT_RANGE_SHIFT,
-    DEFAULT_SALT_THRESHOLD,
     BlockedIndex,
     load_blocked_index,
     save_blocked_index,
@@ -177,13 +176,13 @@ def merge_runs(
     n_chunks: int,
     build_id: str = "build-0",
     n_buckets: int = 32,
-    salt_threshold: int = DEFAULT_SALT_THRESHOLD,
     range_shift: int = DEFAULT_RANGE_SHIFT,
 ) -> BlockedIndex:
     """Phase 2 — the segment merge: partial posting runs (one per chunk,
     each holding a slice of every term's postings) are combined per term
     by the groupBy(term, rsalt).applyInPandas block encode
-    (index.blocks.build_blocks) — the north_star's "groupBy-term
+    (index.blocks.build_blocks, every term range-partitioned by
+    rsalt = doc_id >> range_shift) — the north_star's "groupBy-term
     applyInPandas merge of partial posting runs" — and written as the
     final bucket-partitioned blocked index.
 
@@ -199,7 +198,6 @@ def merge_runs(
         idx,
         os.path.join(path, "index"),
         n_buckets=n_buckets,
-        salt_threshold=salt_threshold,
         range_shift=range_shift,
     )
     chunks = []

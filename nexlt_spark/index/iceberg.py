@@ -9,7 +9,7 @@ every store operation the stand-in performs —
 
 - table creation with the ``bucket(term)`` partition transform (the
   stand-in's ``term_bucket = pmod(xxhash64(term), B)`` column,
-  blocks.py ``save_blocked_index``, :273),
+  written by packed.py ``save_blocked`` behind ``save_blocked_index``),
 - ``MERGE INTO`` last-write-wins upsert on ``doc_key`` (the stand-in's
   tombstone + left_anti join, incremental.py ``ingest_batch``),
 - snapshot time travel (the stand-in's ``as_of_batch`` manifest filter,
@@ -113,7 +113,7 @@ def create_postings_blocks_sql(
     ``save_blocked_index``'s layout: ``bucket(n_buckets, term)`` is the
     catalog-native transform the stand-in emulates with its
     ``term_bucket`` column, so query-term lookups prune to one partition
-    per term and hot-term salting (``rsalt``) spreads files within it."""
+    per term and range partitioning (``rsalt``) spreads files within it."""
     schema = BLOCKS_SCHEMA_POS if positions else BLOCKS_SCHEMA
     props = ",\n".join(
         f"  '{k}' = '{v}'" for k, v in BLOCKS_TABLE_PROPERTIES.items()
@@ -212,7 +212,7 @@ def write_blocks_iceberg(
 ) -> None:
     """Create-or-REPLACE the blocked postings store as an Iceberg table
     (the ``save_blocked_index`` seam, whose ``mode("overwrite")`` is a
-    full truncate — blocks.py:282). DataFrameWriterV2 ``createOrReplace``
+    full truncate — packed.py ``save_blocked``). DataFrameWriterV2 ``createOrReplace``
     with the bucket transform on the writer: no ``term_bucket`` column,
     no manual ``partitionBy``, and — unlike ``overwritePartitions`` — no
     stale rows in bucket partitions the new blocks DataFrame doesn't

@@ -321,7 +321,6 @@ def live_blocked_index(
         idx,
         range_shift=DEFAULT_RANGE_SHIFT if range_shift is None else range_shift,
         block_size=BLOCK_SIZE if block_size is None else block_size,
-        uniform_range=True,
     )
     return BlockedIndex(
         blocks=blocks,
@@ -329,7 +328,6 @@ def live_blocked_index(
         term_stats=idx.term_stats,
         stats=idx.stats,
         analyzer=idx.analyzer,
-        ranged=True,
     )
 
 

@@ -30,8 +30,9 @@ This module is that design, Spark-first:
   same codec as the flat path — byte-compatible BLOCKS_SCHEMA rows, so
   every query path (exact lookup, WAND) works unchanged.
 
-Trade-off vs the flat path: rare terms fragment into one block row per
-occupied doc-range (more, smaller blocks). Queries decode them
+Trade-off of range partitioning (shared with blocks.build_blocks, the
+flat-path encoder): rare terms fragment into one block row per occupied
+doc-range (more, smaller blocks). Queries decode them
 identically; a cold-term compaction pass (merge runs per term, the
 TieredMergePolicy analog) is the follow-up if store size ever matters.
 """
@@ -632,7 +633,6 @@ def build_blocked_direct(
         term_stats=term_stats,
         stats=stats,
         analyzer=analyzer,
-        ranged=True,  # every term range-partitioned ⇒ per-range fused scoring OK
         store_layout=store_layout,
     )
 
@@ -649,9 +649,9 @@ def save_blocked(bidx: BlockedIndex, path: str, n_buckets: int = 32) -> None:
         # Skipped when the builder already keyed its encode exchange by
         # this exact layout (build_blocked_direct stream path): the
         # parquet flush then runs inside the encode stage itself.
-        # key by rsalt AND doc-range: on a flat-path index rsalt is 0 for
-        # every non-hot term, which would collapse each bucket to ONE
-        # parquet file (single scan split per hot term at query time)
+        # key by rsalt AND a 64k-doc range: a coarse range_shift puts a
+        # small store in ONE rsalt, which alone would collapse each bucket
+        # to ONE parquet file (single scan split per term at query time)
         blocks = blocks.repartition(
             F.col("term_bucket"),
             F.pmod(
@@ -700,7 +700,6 @@ def save_blocked(bidx: BlockedIndex, path: str, n_buckets: int = 32) -> None:
         bidx.stats.total_tokens,
         n_buckets,
         bidx.analyzer,
-        bidx.ranged,
     )
 
 
@@ -711,21 +710,21 @@ def _write_stats_table(
     total_tokens: int,
     n_buckets: int,
     analyzer: str,
-    ranged: bool,
 ) -> None:
     """The stats table is ONE metadata row — on a local store, write it
     driver-side with pyarrow instead of scheduling a 1-task Spark job
     (the Iceberg analog is a manifest write, also a driver/commit-side
     operation). On a URI-scheme store (hdfs://, s3a://) fall back to a
     1-row Spark write so save_blocked works end-to-end on any Hadoop
-    filesystem. Readable by spark.read.parquet either way."""
+    filesystem. Readable by spark.read.parquet either way. ``ranged`` is
+    always True: load_blocked_index refuses a store without it."""
     from nexlt_spark.fs import local_path
 
     lp = local_path(path)
     if lp is None:
         (
             spark.createDataFrame(
-                [(n_docs, total_tokens, n_buckets, analyzer, ranged)],
+                [(n_docs, total_tokens, n_buckets, analyzer, True)],
                 "n_docs long, total_tokens long, n_buckets int, analyzer string, ranged boolean",
             )
             .coalesce(1)
@@ -746,7 +745,7 @@ def _write_stats_table(
             "total_tokens": pa.array([total_tokens], pa.int64()),
             "n_buckets": pa.array([n_buckets], pa.int32()),
             "analyzer": pa.array([analyzer], pa.string()),
-            "ranged": pa.array([ranged], pa.bool_()),
+            "ranged": pa.array([True], pa.bool_()),
         }
     )
     pq.write_table(tbl, os.path.join(lp, "part-00000.parquet"))

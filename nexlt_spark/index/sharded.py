@@ -8,7 +8,7 @@ ranks depend on how documents landed on shards; the fix everyone
 deploys is ExactStatsCache — global df/doclen stats so every shard
 scores identically.
 
-Spark transposition: a shard here is an on-disk blocked store
+Spark transposition: a shard here is an on-disk ranged blocked store
 (index.blocks.save_blocked_index / index.packed.save_blocked).
 ``ShardedIndex`` presents the SAME protocol the serving plans consume
 (``stats`` / ``term_dfs`` / ``lookup`` / ``has_positions`` /
@@ -208,9 +208,9 @@ def _global_view(shard: BlockedIndex, stats: IndexStats) -> BlockedIndex:
     GLOBAL ones (n_docs, avgdl) — the Solr ExactStatsCache analog for
     the zero-Spark-job rows route. Memoized on the shard; shares the
     shard's skip/decoded-block/θ caches (same store bytes), but keeps
-    its OWN term-meta cache, which sharded_topk_rows seeds with global
-    df so every shard scores with idf(N_global, df_global) — bitwise
-    the same float the unsharded searcher computes."""
+    its OWN term-meta cache and term dictionary, which sharded_topk_rows
+    seeds with global df so every shard scores with idf(N_global,
+    df_global) — bitwise the same float the unsharded searcher computes."""
     view = getattr(shard, "_global_stats_view", None)
     if view is not None and view.stats == stats:
         return view
@@ -218,11 +218,11 @@ def _global_view(shard: BlockedIndex, stats: IndexStats) -> BlockedIndex:
 
     view = dataclasses.replace(shard, stats=stats)
     # share the byte-bounded caches that depend only on store bytes
-    for attr in ("_skip_cache", "_decoded_block_cache", "_theta_probe_cache",
-                 "_pa_dataset"):
-        val = getattr(shard, attr, None)
-        if val is not None:
-            setattr(view, attr, val)
+    view._skip_cache = shard._skip_cache
+    view._decoded_block_cache = shard._decoded_block_cache
+    view._theta_probe_cache = shard._theta_probe_cache
+    if getattr(shard, "_pa_dataset", None) is not None:
+        view._pa_dataset = shard._pa_dataset
     shard._global_stats_view = view
     return view
 
@@ -272,18 +272,11 @@ def sharded_topk_rows(
         if mode == "and" and len(meta) < len(qterms):
             continue  # conjunction cannot match here
         view = _global_view(shard, sharded.stats)
-        cache = getattr(view, "_term_meta_cache", None)
-        if cache is None:
-            from nexlt_spark.lru import ByteLRU
-            from nexlt_spark.query.wand import _META_CACHE_MAX_BYTES
-
-            cache = ByteLRU(lambda: _META_CACHE_MAX_BYTES)
-            view._term_meta_cache = cache
         for t, (df_local, mtf, nb, qs) in meta.items():
             # global df + LOCAL block shape: idf becomes the global
             # float; block-max bounds stay valid (local mtf × global
             # idf ≥ any local contribution under global idf)
-            cache[t] = (gdf[t], mtf, nb, qs)
+            view._term_meta_cache[t] = (gdf[t], mtf, nb, qs)
         # seed the TERM DICTIONARY with global df too (local bucket):
         # a per-shard exact fallback (candidate-cap overflow) scores via
         # score_postings → term_dfs, which must see the same global df

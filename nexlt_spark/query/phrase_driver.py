@@ -25,8 +25,7 @@ ExactPhraseScorer.
 
 Routing: phrase_topk serves driver-side when the store is pyarrow-
 readable with positions and every stage fits the driver decode caps;
-otherwise it falls back to the fused ranged kernel (one Spark job) or
-the exact fused phrase plan.
+otherwise it falls back to the fused ranged kernel (one Spark job).
 """
 
 from __future__ import annotations
@@ -212,9 +211,9 @@ def phrase_topk(
     as_rows: bool = False,
     stats_out: Optional[dict] = None,
 ):
-    """Routed phrase top-k: driver plan when eligible, else the fused
-    ranged kernel (one Spark job), else the exact fused phrase plan.
-    All routes rank- and score-identical (tests/test_phrase_driver.py)."""
+    """Routed phrase top-k over a (ranged) BlockedIndex: driver plan
+    when eligible, else the fused ranged kernel (one Spark job). Both
+    routes rank- and score-identical (tests/test_phrase_driver.py)."""
     rows = phrase_topk_driver(bidx, phrase_tokens, k, slop, boosts, stats_out)
     if rows is not None:
         if as_rows:
@@ -233,14 +232,9 @@ def phrase_topk(
         return spark.createDataFrame(pdf, schema=EMPTY_SCORED_SCHEMA)
     if stats_out is not None:
         stats_out["plan"] = "spark"
-    if getattr(bidx, "ranged", False):
-        from nexlt_spark.query.ranged import phrase_score_ranged
+    from nexlt_spark.query.ranged import phrase_score_ranged
 
-        scored = phrase_score_ranged(bidx, phrase_tokens, limit=k, slop=slop, boosts=boosts)
-    else:
-        from nexlt_spark.query.exact import phrase_score_postings
-
-        scored = phrase_score_postings(bidx, phrase_tokens, slop=slop, boosts=boosts)
+    scored = phrase_score_ranged(bidx, phrase_tokens, limit=k, slop=slop, boosts=boosts)
     top = scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
     if as_rows:
         return [(r["doc_id"], r["score"]) for r in top.collect()]

@@ -237,16 +237,17 @@ def _phrase_kernel(
 def _pruned_blocks(index, terms: List[str], positions: bool) -> DataFrame:
     """Bucket-pruned, column-pruned block rows for the query terms.
 
-    Raises on a non-ranged store: the per-range kernels assume a doc's
-    postings for EVERY term share one rsalt group (index.ranged). On the
-    flat-salted layout a doc spans groups, so the fold would silently
-    fragment scores and drop AND matches — fail fast instead."""
+    Raises on a non-ranged index (the flat InvertedIndex, ShardedIndex):
+    the per-range kernels assume a doc's postings for EVERY term share
+    one rsalt group (BlockedIndex.ranged). Elsewhere a doc can span
+    groups, so the fold would silently fragment scores and drop AND
+    matches — fail fast instead."""
     from pyspark.sql import functions as F
 
     if not getattr(index, "ranged", False):
         raise ValueError(
-            "score_ranged/phrase_score_ranged require a uniformly ranged "
-            "BlockedIndex (build with the packed builder / ranged=True)"
+            "score_ranged/phrase_score_ranged require a (ranged) "
+            "BlockedIndex"
         )
     b = index.blocks
     if index.n_buckets and "term_bucket" in b.columns:

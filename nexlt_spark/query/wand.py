@@ -47,15 +47,19 @@ rows (`first_doc_id IN (...)` pushed to the scan, or a broadcast
 semi-join above the literal cap): OR = 3 small jobs (probe decode,
 candidate decode, rescore), AND = 2 (rare-list decode, rescore), and a
 guaranteed cap overflow falls back BEFORE any candidate job runs.
-Terms whose block count exceeds SKIP_CACHE_MAX_BLOCKS (the 10^12-doc
-head-term case: billions of blocks can't sit on one driver) route the
-whole query through the legacy Spark-side pruning flow below, whose
-pruning runs as cluster-side filters instead.
+
+**The fused per-range plan.** Every BlockedIndex is ranged (a doc's
+postings for every term share one rsalt group), so when the driver plan
+does not apply — an in-memory store, whose every driver step would be a
+collect job, or a term past SKIP_CACHE_MAX_BLOCKS (the 10^12-doc
+head-term case: billions of blocks can't sit on one driver) — the whole
+WAND runs range-locally inside ONE groupBy(rsalt) applyInPandas pass
+(`_make_wand_range_kernel`). That kernel takes no doc_filter: a
+DataFrame filter off the driver plan goes to the exact per-range plan.
 """
 
 from __future__ import annotations
 
-import threading
 from typing import Dict, List, Optional, Tuple
 
 import numpy as np
@@ -65,8 +69,7 @@ from pyspark.sql import functions as F
 
 from nexlt_spark.index.blocks import DECODED_SCHEMA, BlockedIndex
 from nexlt_spark.index.codec import decode_block_rows
-from nexlt_spark.lru import ByteLRU
-from nexlt_spark.query.exact import EMPTY_SCORED_SCHEMA, fold_scores, idf_map_col
+from nexlt_spark.query.exact import EMPTY_SCORED_SCHEMA, fold_scores
 from nexlt_spark.scoring import idf
 
 DEFAULT_CANDIDATE_CAP = 500_000
@@ -74,7 +77,7 @@ DEFAULT_SLICE_SHIFT = 12  # candidate-range granularity: 4096 docIDs
 PROBE_BLOCKS_PER_TERM = 16
 # per-term driver skip-data cap: 1M blocks ≈ 4×8 B arrays = 32 MB/term,
 # covering ~128M postings/term. Above it (true head terms at 10^10+ docs)
-# the legacy Spark-side pruning flow serves the query.
+# the fused per-range kernel serves the query.
 SKIP_CACHE_MAX_BLOCKS = 1_000_000
 # byte budgets for the driver's positive metadata caches (VERDICT r4
 # "what's wrong" #1: these were count/vocab-bounded and could grow a
@@ -176,16 +179,13 @@ def _decode_filtered(
     return sel.mapInPandas(dec, schema=DECODED_SCHEMA)
 
 
-def _query_blocks(bidx: BlockedIndex, present: List[str], idfs: Optional[dict] = None) -> DataFrame:
-    """Block rows for the query terms, bucket-pruned, with ub column."""
+def _query_blocks(bidx: BlockedIndex, present: List[str]) -> DataFrame:
+    """Block rows for the query terms, bucket-pruned."""
     b = bidx.blocks
     if bidx.n_buckets and "term_bucket" in b.columns:
         buckets = sorted({_bucket(t, bidx.n_buckets) for t in present})
         b = b.where(F.col("term_bucket").isin(buckets))
-    b = b.where(F.col("term").isin(present))
-    if idfs is not None:
-        b = b.withColumn("ub", idf_map_col(idfs) * F.col("max_tfnorm"))
-    return b
+    return b.where(F.col("term").isin(present))
 
 
 # per-term block-ub quantile grid kept in the metadata cache — the
@@ -254,18 +254,9 @@ def _term_meta(bidx: BlockedIndex, qterms: List[str]) -> dict:
     feeds the driver-side WAND-vs-exact planner (query.planner) with an
     estimate of how many blocks a θ cut would keep — no postings touched.
     """
-    cache = getattr(bidx, "_term_meta_cache", None)
-    if cache is None:
-        cache = ByteLRU(lambda: _META_CACHE_MAX_BYTES)
-        bidx._term_meta_cache = cache
-    negs = getattr(bidx, "_term_meta_negs", None)
-    if negs is None:
-        from collections import OrderedDict
-
-        negs = OrderedDict()  # FIFO of term-absent entries only
-        bidx._term_meta_negs = negs
-        bidx._term_meta_negs_lock = threading.Lock()
-    negs_lock = getattr(bidx, "_term_meta_negs_lock", None) or threading.Lock()
+    cache = bidx._term_meta_cache
+    negs = bidx._term_meta_negs  # FIFO of term-absent entries only
+    negs_lock = bidx._term_meta_negs_lock
 
     def _note_negative(term: str) -> None:
         # O(1) bounded negative cache: insert, evict oldest past the cap.
@@ -297,10 +288,7 @@ def _term_meta(bidx: BlockedIndex, qterms: List[str]) -> dict:
         # job) and fill the skip cache in the same pass for under-cap
         # terms; over-cap terms fall through to the Spark aggregate.
         dset = _pa_ds(bidx)
-        skip_cache = getattr(bidx, "_skip_cache", None)
-        if skip_cache is None:
-            skip_cache = ByteLRU(lambda: _SKIP_CACHE_MAX_BYTES)
-            bidx._skip_cache = skip_cache
+        skip_cache = bidx._skip_cache
         spark_side = []
         for t in missing:
             # ONE bounded scan per term: head(cap+1) stops reading once
@@ -363,15 +351,12 @@ def _term_meta(bidx: BlockedIndex, qterms: List[str]) -> dict:
 
 def _skip_data(bidx: BlockedIndex, terms: List[str]) -> Dict[str, dict]:
     """Driver-resident per-term skip data: sorted-by-first numpy arrays
-    (first, last, n, mtf) over every block row of the term — salted rows
-    included, so selections built from these keys are never an
-    under-count. ONE skinny Arrow collect per miss set (no payload
-    columns cross the wire), memoized on the index object like
-    `_term_meta`; the caller gates terms to SKIP_CACHE_MAX_BLOCKS."""
-    cache = getattr(bidx, "_skip_cache", None)
-    if cache is None:
-        cache = ByteLRU(lambda: _SKIP_CACHE_MAX_BYTES)
-        bidx._skip_cache = cache
+    (first, last, n, mtf), one entry per block row of the term (ranged
+    blocks never share a first_doc_id within a term). ONE skinny Arrow
+    collect per miss set (no payload columns cross the wire), memoized
+    on the index object like `_term_meta`; the caller gates terms to
+    SKIP_CACHE_MAX_BLOCKS."""
+    cache = bidx._skip_cache
     # resolve through a LOCAL dict (same eviction-safety rationale as
     # _term_meta: a ByteLRU entry written here can be gone by the return)
     out: Dict[str, dict] = {}
@@ -433,9 +418,9 @@ def maxscore_split(present: List[str], gm: Dict[str, float], theta: float) -> se
     candidate discovery needs only the essential terms' kept blocks; the
     rescore still folds non-essential contributions exactly. The
     largest-gm term is always essential. ONE definition shared by the
-    driver flow, the cluster flow, and the planner's rehearsal — the
-    planner's 'rehearses the execution exactly' claim and the split's
-    rank-safety both require the three callers to agree."""
+    driver flow, the fused per-range kernel, and the planner's rehearsal
+    — the planner's 'rehearses the execution exactly' claim and the
+    split's rank-safety both require the three callers to agree."""
     by_gm = sorted(present, key=lambda t: gm[t])
     non_essential: set = set()
     prefix = 0.0
@@ -520,13 +505,10 @@ def _driver_theta_probe(
     SHARE this cache with their parent shard under a different avgdl
     (review r5: idf-tuple float collisions across the two would
     otherwise serve the wrong θ). Returns (theta, probe_postings)."""
-    cache = getattr(bidx, "_theta_probe_cache", None)
-    if cache is None:
-        # ByteLRU: entries are tiny (theta, postings) tuples, but get/
-        # insert must be lock-protected — concurrent searcher threads
-        # share this cache (tools/bench_qps.py)
-        cache = ByteLRU(lambda: _THETA_CACHE_MAX_BYTES)
-        bidx._theta_probe_cache = cache
+    # ByteLRU: entries are tiny (theta, postings) tuples, but get/insert
+    # must be lock-protected — concurrent searcher threads share this
+    # cache (tools/bench_qps.py)
+    cache = bidx._theta_probe_cache
     key = (tuple(present), tuple(idfs[t] for t in present), avgdl, k) + (
         (attr_f.key(),) if attr_f is not None else ()
     )
@@ -562,10 +544,7 @@ def _select_blocks_by_keys(
 
     ≤ LITERAL_KEY_CAP total keys inline as per-term `first_doc_id IN`
     literals (parquet-pushable; In filters reach the scan); above that a
-    broadcast left-semi join carries the keys. Salted stores may hold
-    several block rows per key — a filter/semi-join passes each row once,
-    so duplicates are impossible and over-selection is a superset (safe:
-    probes only raise θ, candidates only widen, rescore rows are masked).
+    broadcast left-semi join carries the keys.
     """
     keys = {t: np.unique(v) for t, v in keys_by_term.items() if len(v)}
     if not keys:
@@ -603,16 +582,6 @@ def _blocks_hit(sd: dict, cand_ids: np.ndarray) -> np.ndarray:
 _BLOCK_CACHE_MAX_BYTES = 256 * 1024 * 1024
 
 
-def _block_cache(bidx):
-    cache = getattr(bidx, "_decoded_block_cache", None)
-    if cache is None:
-        # max_bytes re-read per eviction pass so tests monkeypatching the
-        # module knob see it take effect on already-created caches too
-        cache = ByteLRU(lambda: _BLOCK_CACHE_MAX_BYTES)
-        bidx._decoded_block_cache = cache
-    return cache
-
-
 def _collect_decode(
     bidx: BlockedIndex, blocks_q: DataFrame, keys_by_term: Dict[str, np.ndarray]
 ):
@@ -626,7 +595,7 @@ def _collect_decode(
     unspecified (callers fold/unique/mask — all order-insensitive)."""
     dset = _pa_ds(bidx)
     if dset is not None:
-        cache = _block_cache(bidx)
+        cache = bidx._decoded_block_cache
         hits: list = []  # (term, (ids, tfs, dls)) in request order
         missing: Dict[str, list] = {}
         for t, firsts in keys_by_term.items():
@@ -670,18 +639,9 @@ def _collect_decode(
                     # fetch's decode buffer while the LRU accounts only
                     # the slice's nbytes (ADVICE r4 #2 — retained memory
                     # could exceed the budget by the parent/slice ratio)
-                    ent = tuple(
+                    new_entries[key] = tuple(
                         np.ascontiguousarray(a[seg]) for a in (ids, tfs, dls)
                     )
-                    prev = new_entries.get(key)
-                    if prev is not None:
-                        # salted stores: several block rows share a key —
-                        # the cache entry is their concatenation (the
-                        # fetch-by-key always returns all of them)
-                        ent = tuple(
-                            np.concatenate([p, e]) for p, e in zip(prev, ent)
-                        )
-                    new_entries[key] = ent
             for key, ent in new_entries.items():
                 # insert + byte-accounting + eviction are one locked
                 # ByteLRU operation; the strict byte bound evicts LRU-first
@@ -791,79 +751,13 @@ def _xxh64(data: bytes, seed: int) -> int:
     return signed
 
 
-MAX_JVM_SLICE_FILTER = 4096
-
-
-def _slice_prefilter(blocks: DataFrame, cand_ids: np.ndarray, slice_shift: int) -> DataFrame:
-    """JVM-side skip-list jump for the LEGACY flow (no driver skip data):
-    drop block rows whose [first,last] docID range intersects no
-    candidate slice BEFORE the payload bytes cross the Arrow hop. An
-    F.exists over the slice-id array literal — O(rows × n_slices) JVM
-    lambda evals, so gated to ≤ MAX_JVM_SLICE_FILTER slices; the driver
-    flow replaces this with exact per-block selection from skip data."""
-    slices = np.unique(cand_ids >> np.int64(slice_shift))
-    if slices.size == 0 or slices.size > MAX_JVM_SLICE_FILTER:
-        return blocks
-    arr = F.array(*[F.lit(int(s)) for s in slices.tolist()])
-    lo = F.shiftright(F.col("first_doc_id"), slice_shift)
-    hi = F.shiftright(F.col("last_doc_id"), slice_shift)
-    return blocks.where(F.exists(arr, lambda s: (s >= lo) & (s <= hi)))
-
-
-def _est_covered_fraction(n_docs: int, n_cand: int, slice_shift: int) -> float:
-    """Upper-bound estimate of the docID-space fraction candidate slices
-    cover — the driver-side signal for how much the rescore's skip-list
-    jump will actually skip."""
-    if n_docs <= 0:
-        return 1.0
-    return min(1.0, (n_cand << slice_shift) / float(n_docs))
-
-
-# when candidate slices cover less than this fraction of the docID space,
-# the rescore takes the shuffle-free rows path (decode+mask in place via
-# mapInPandas; only masked posting rows — ≤ |candidates|·|terms| — reach
+# a driver-plan rescore too big for the driver decode caps runs on the
+# cluster: when candidate-intersecting blocks hold less than this fraction
+# of the query terms' postings it takes the shuffle-free rows plan
+# (decode+mask in place via mapInPandas; only masked posting rows reach
 # the fold's exchange). Above it, most blocks decode anyway and the
 # per-range kernel (one payload exchange, fold fused) is the better plan.
 ROWS_RESCORE_COVERAGE = 0.3
-
-
-def _rescore(
-    bidx, blocks_q, present, idfs, avgdl, n_required, bc, slice_shift,
-    covered: float = 1.0, rescore: str = "auto",
-    rescore_keys: Optional[Dict[str, np.ndarray]] = None,
-):
-    """Candidate-restricted exact rescore — two plans, chosen by the
-    estimated slice coverage:
-
-    - **rows** (sparse candidates, the WAND design case at scale): decode
-      + skip + mask happen inside mapInPandas on the scan — NO shuffle of
-      block payloads; the fold's groupBy exchanges only the masked
-      posting rows. Cost scales with candidate volume, not corpus size
-      (the §6 crossover's requirement). With driver skip data
-      (rescore_keys) the scan itself reads only the exact intersecting
-      blocks — key-pushed selection, no JVM lambda prefilter.
-    - **ranged kernel** (dense candidates on a ranged store): one
-      groupBy(rsalt) exchange of block payloads, decode+mask+fold fused
-      per range (query.ranged.score_ranged_masked) — cheaper than
-      shuffling ~every decoded posting row when the mask keeps most.
-    """
-    use_ranged = (
-        getattr(bidx, "ranged", False)
-        and rescore != "rows"
-        and (rescore == "ranged" or covered >= ROWS_RESCORE_COVERAGE)
-    )
-    if use_ranged:
-        from nexlt_spark.query.ranged import score_ranged_masked
-
-        return score_ranged_masked(
-            blocks_q, present, idfs, avgdl, n_required, bc, slice_shift
-        )
-    if rescore_keys is not None:
-        pruned = _select_blocks_by_keys(blocks_q, rescore_keys)
-    else:
-        pruned = _slice_prefilter(blocks_q, bc.value, slice_shift)
-    rows = _decode_filtered(pruned, bc, slice_shift)
-    return fold_scores(rows, idfs, avgdl, n_required)
 
 
 def wand_topk(
@@ -873,26 +767,28 @@ def wand_topk(
     mode: str = "or",
     doc_filter: Optional[DataFrame] = None,
     candidate_cap: int = DEFAULT_CANDIDATE_CAP,
-    slice_shift: Optional[int] = None,
     stats_out: Optional[dict] = None,
-    rescore: str = "auto",
-    skip_cache: bool = True,
     boosts: Optional[dict] = None,
     as_rows: bool = False,
 ) -> DataFrame:
     """(doc_id, score) top-k via Block-Max WAND; ≡ exact path ranks+scores.
 
-    skip_cache=True (default) serves the query from driver-resident skip
-    data when every present term's block count fits the cache cap —
-    block selection/pruning/fallback decisions are then driver-side numpy
-    and each Spark job reads only key-selected blocks. skip_cache=False
-    (or an over-cap term) routes through the legacy cluster-side pruning
-    flow. slice_shift=None (default) sizes the rescore's skip-list
-    granularity to the collected candidate count (_adaptive_slice_shift);
-    pass an int to pin it. stats_out, when given, is filled with pruning
-    telemetry (theta, blocks_total, blocks_kept, n_candidates,
-    slice_shift, fallback, plan) — free on the driver plan (no extra
-    Spark jobs).
+    Three routes (module docstring), all rank-identical to exact:
+
+    - **driver plan** — every present term's block count fits
+      SKIP_CACHE_MAX_BLOCKS and the store is pyarrow-readable, or a
+      DataFrame doc_filter needs the filtered driver steps: pruning and
+      fallback decisions are driver-side numpy over memoized skip data,
+      and each Spark job, if any, reads only key-selected blocks;
+    - **fused plan** — otherwise, unfiltered: one groupBy(rsalt) pass
+      runs the whole WAND per doc range;
+    - **exact** — otherwise (a DataFrame doc_filter off the driver
+      plan): the filtered exact per-range plan.
+
+    stats_out, when given, is filled with the route (plan, spark_plan)
+    and, on the driver plan, pruning telemetry (theta, blocks_total,
+    blocks_kept, n_candidates, slice_shift, fallback) — free, no extra
+    Spark jobs.
 
     as_rows=True returns a plain ``[(doc_id, score), ...]`` list (the
     Lucene TopDocs shape) instead of a DataFrame. When the driver plan
@@ -911,13 +807,12 @@ def wand_topk(
             return []
         return spark.createDataFrame([], EMPTY_SCORED_SCHEMA)
 
-    use_driver = skip_cache and all(
-        meta[t][2] <= SKIP_CACHE_MAX_BLOCKS for t in present
-    )
+    under_cap = all(meta[t][2] <= SKIP_CACHE_MAX_BLOCKS for t in present)
+    on_disk = _pa_ds(bidx) is not None
     # fq filters: an AttrFilter is served DRIVER-SIDE (candidates/θ
     # masked against the doc_attrs sidecar, zero extra Spark jobs) when
     # the driver plan runs on a pyarrow-readable store with the sidecar
-    # present; every other route lowers it to the legacy DataFrame form
+    # present; every other route lowers it to the DataFrame form
     # (identical clauses — both go through filter_documents).
     from nexlt_spark.query.attrs import AttrFilter, has_attrs, to_doc_filter_df
 
@@ -925,52 +820,38 @@ def wand_topk(
     if attr_f is not None:
         if attr_f.is_empty():
             doc_filter = attr_f = None
-        elif (
-            not use_driver or _pa_ds(bidx) is None or not has_attrs(bidx)
-        ):
+        elif under_cap and on_disk and has_attrs(bidx):
+            doc_filter = None  # the driver flow applies the filter itself
+        else:
             doc_filter = to_doc_filter_df(bidx, attr_f.filters, attr_f.documents)
             attr_f = None
-        else:
-            doc_filter = None  # the driver flow applies the filter itself
-    # Fused one-job plan (r4): on a uniformly RANGED store, when the query
-    # would otherwise run cluster-side Spark jobs — payloads not driver-
-    # readable (in-memory store: every driver-flow step is a collect job),
-    # terms past the skip-data cap, or skip_cache=False — run the whole
-    # WAND (local θ probe → MaxScore split → kept-block candidates →
-    # exact rescore → local top-k) inside ONE applyInPandas pass per doc
-    # range. Replaces the legacy candidate-collect → rescore → merge
-    # multi-job flow (its ~1.4-1.5 s orchestration floor, VERDICT r3 #2).
-    use_fused = (
-        getattr(bidx, "ranged", False)
-        and doc_filter is None
-        and rescore == "auto"
-        and (not use_driver or _pa_ds(bidx) is None)
-    )
-    if use_fused:
+    if under_cap and (on_disk or doc_filter is not None):
         if stats_out is not None:
-            stats_out["plan"] = "spark"
-            stats_out["spark_plan"] = "fused"
-            stats_out["fallback"] = False
-        out = _wand_topk_ranged_fused(
-            bidx, spark, meta, present, k, mode, stats_out, boosts
-        )
-        return _df_rows(out) if as_rows else out
-    if stats_out is not None:
-        stats_out["plan"] = "driver" if use_driver else "spark"
-        if attr_f is not None:
-            stats_out["attr_filtered"] = True
-    if use_driver:
+            stats_out["plan"] = "driver"
+            if attr_f is not None:
+                stats_out["attr_filtered"] = True
         out = _wand_topk_driver(
             bidx, spark, meta, present, k, mode, doc_filter, candidate_cap,
-            slice_shift, stats_out, rescore, boosts, as_rows, attr_f,
+            stats_out, boosts, as_rows, attr_f,
         )
         if as_rows:
             return out if isinstance(out, list) else _df_rows(out)
         return out
-    out = _wand_topk_spark(
-        bidx, spark, meta, present, k, mode, doc_filter, candidate_cap,
-        slice_shift, stats_out, rescore, boosts,
-    )
+    if doc_filter is None:
+        # Fused one-job plan (r4): local θ probe → MaxScore split →
+        # kept-block candidates → exact rescore → local top-k inside ONE
+        # applyInPandas pass per doc range — no candidate collect, no
+        # multi-job orchestration floor
+        spark_plan = "fused"
+        out = _wand_topk_ranged_fused(bidx, meta, present, k, mode, boosts)
+    else:
+        # the fused kernel takes no filter: filtered exact per-range plan
+        spark_plan = "exact"
+        out = _exact_fallback(bidx, present, mode, doc_filter, k, boosts)
+    if stats_out is not None:
+        stats_out.update(
+            plan="spark", spark_plan=spark_plan, fallback=doc_filter is not None
+        )
     return _df_rows(out) if as_rows else out
 
 
@@ -994,7 +875,7 @@ def _exact_fallback(bidx, present, mode, doc_filter, k, boosts=None) -> DataFram
 
 def _wand_topk_driver(
     bidx, spark, meta, present, k, mode, doc_filter, candidate_cap,
-    slice_shift, stats_out, rescore, boosts=None, as_rows=False, attr_f=None,
+    stats_out, boosts=None, as_rows=False, attr_f=None,
 ) -> DataFrame:
     """The skip-data plan: pruning decisions on driver-resident block
     metadata, Spark jobs only over key-selected blocks (module docstring,
@@ -1040,7 +921,7 @@ def _wand_topk_driver(
             return _exact_fallback(bidx, present, mode, doc_filter, k, boosts)
 
     sd = _skip_data(bidx, present)
-    blocks_q = _query_blocks(bidx, present, idfs)
+    blocks_q = _query_blocks(bidx, present)
 
     def _fits(keys: Dict[str, np.ndarray], postings: int) -> bool:
         return (
@@ -1163,9 +1044,7 @@ def _wand_topk_driver(
             return [] if as_rows else spark.createDataFrame([], EMPTY_SCORED_SCHEMA)
 
     # ---- rescore: exact per-block intersection against candidates ----
-    shift = (
-        _adaptive_slice_shift(n, cand_ids.size) if slice_shift is None else slice_shift
-    )
+    shift = _adaptive_slice_shift(n, cand_ids.size)
     rescore_keys = {}
     hit_postings = 0
     for t in present:
@@ -1175,7 +1054,12 @@ def _wand_topk_driver(
     total_postings = sum(dfs.values())
     covered = hit_postings / total_postings if total_postings else 1.0
 
-    use_local = rescore == "auto" and _fits(rescore_keys, hit_postings)
+    if _fits(rescore_keys, hit_postings):
+        rescore_plan = "local"
+    elif covered >= ROWS_RESCORE_COVERAGE:
+        rescore_plan = "ranged"
+    else:
+        rescore_plan = "rows"
     if stats_out is not None:
         stats_out.update(
             fallback=False,
@@ -1186,12 +1070,12 @@ def _wand_topk_driver(
             rescore_blocks=int(sum(v.size for v in rescore_keys.values())),
             slice_shift=shift,
             covered=round(covered, 4),
-            rescore_plan="local" if use_local else rescore,
+            rescore_plan=rescore_plan,
         )
         if mode == "or":
             stats_out["n_essential"] = len(essential)
 
-    if use_local:
+    if rescore_plan == "local":
         # the whole rescore fits the driver caps: one shuffle-free scan
         # collects the intersecting blocks' payloads, numpy masks to the
         # candidates and folds (bit-identical to the Column fold)
@@ -1208,10 +1092,24 @@ def _wand_topk_driver(
         return _local_topk_df(spark, uids[keep], sc[keep], k)
 
     bc = spark.sparkContext.broadcast(cand_ids)
-    scored = _rescore(
-        bidx, blocks_q, present, idfs, avgdl, n_required, bc, shift, covered,
-        rescore, rescore_keys,
-    )
+    if rescore_plan == "ranged":
+        # dense candidates: one groupBy(rsalt) exchange of block payloads,
+        # decode+mask+fold fused per range — cheaper than shuffling ~every
+        # decoded posting row when the mask keeps most of them
+        from nexlt_spark.query.ranged import score_ranged_masked
+
+        scored = score_ranged_masked(
+            blocks_q, present, idfs, avgdl, n_required, bc, shift
+        )
+    else:
+        # sparse candidates (the WAND design case at scale): the scan reads
+        # only the key-selected intersecting blocks and decodes + masks
+        # them in place — NO payload shuffle; the fold's exchange carries
+        # only the masked posting rows (≤ |candidates|·|terms|)
+        rows = _decode_filtered(
+            _select_blocks_by_keys(blocks_q, rescore_keys), bc, shift
+        )
+        scored = fold_scores(rows, idfs, avgdl, n_required)
     return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
 
 
@@ -1340,9 +1238,7 @@ def _make_wand_range_kernel(
     return kern
 
 
-def _wand_topk_ranged_fused(
-    bidx, spark, meta, present, k, mode, stats_out, boosts=None
-) -> DataFrame:
+def _wand_topk_ranged_fused(bidx, meta, present, k, mode, boosts=None) -> DataFrame:
     """ONE Spark job: groupBy(rsalt) → per-range WAND kernel → global
     TakeOrderedAndProject over the ≤ k·n_ranges local winners. No
     candidate collect, no driver cap (candidates never leave the
@@ -1370,133 +1266,5 @@ def _wand_topk_ranged_fused(
         .select(*cols)
         .groupBy("rsalt")
         .applyInPandas(kern, SCORED_SCHEMA)
-    )
-    return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-
-
-def _wand_topk_spark(
-    bidx, spark, meta, present, k, mode, doc_filter, candidate_cap,
-    slice_shift, stats_out, rescore, boosts=None,
-) -> DataFrame:
-    """Legacy cluster-side pruning flow — block selection and candidate
-    discovery as Spark filters/sorts. Serves queries whose terms exceed
-    the driver skip-data cap (10^10+-doc head terms) and skip_cache=False
-    callers; pays an extra metadata sort job (OR probe keys) and JVM
-    slice prefilters the driver plan avoids."""
-    n, avgdl = bidx.stats.n_docs, bidx.stats.avgdl
-    dfs = {t: meta[t][0] for t in present}
-    idfs = {t: idf(n, dfs[t]) for t in present}
-    if boosts:
-        idfs = {t: v * boosts.get(t, 1.0) for t, v in idfs.items()}
-    blocks_q = _query_blocks(bidx, present, idfs)
-    n_required = len(present) if mode == "and" else None
-
-    if mode == "and":
-        # rarest-term-driven conjunction: candidates = smallest list.
-        rare = min(present, key=lambda t: dfs[t])
-        cand_rows = _decode_filtered(blocks_q.where(F.col("term") == rare))
-        cand_df = cand_rows.select("doc_id")
-        if doc_filter is not None:
-            cand_df = cand_df.join(doc_filter.select("doc_id"), "doc_id", "left_semi")
-        cand = cand_df.limit(candidate_cap + 1).collect()
-        if len(cand) > candidate_cap:
-            if stats_out is not None:
-                stats_out["fallback"] = True
-            return _exact_fallback(bidx, present, mode, doc_filter, k, boosts)
-        cand_ids = np.sort(np.array([r["doc_id"] for r in cand], dtype=np.int64))
-        if cand_ids.size == 0:
-            return spark.createDataFrame([], EMPTY_SCORED_SCHEMA)
-        shift = (
-            _adaptive_slice_shift(n, cand_ids.size) if slice_shift is None else slice_shift
-        )
-        covered = _est_covered_fraction(n, cand_ids.size, shift)
-        bc = spark.sparkContext.broadcast(cand_ids)
-        scored = _rescore(
-            bidx, blocks_q, present, idfs, avgdl, n_required, bc, shift, covered,
-            rescore,
-        )
-        if stats_out is not None:
-            stats_out.update(
-                fallback=False, n_candidates=int(cand_ids.size), theta=None,
-                slice_shift=shift, covered=round(covered, 4),
-            )
-        return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-
-    # ---- OR mode: θ probe → block pruning → candidates → rescore ----
-    # gm comes free from the cached term metadata (no extra Spark job)
-    gm = {t: idfs[t] * meta[t][1] for t in present}
-    sum_gm = sum(gm.values())
-
-    # θ-probe block selection runs on SKINNY metadata (term, first_doc_id,
-    # ub) — a direct orderBy(ub).limit(n) would drag every block's payload
-    # byte columns through the sort exchange (measured: 13 s on a 120k-block
-    # head list vs ~0.3 s skinny). The collected keys then filter blocks_q
-    # per term; a key collision across salted blocks only decodes a few
-    # extra blocks, which can only RAISE θ (partials stay lower bounds).
-    n_probe = PROBE_BLOCKS_PER_TERM * len(present)
-    probe_keys = (
-        blocks_q.select("term", "first_doc_id", "ub")
-        .orderBy(F.col("ub").desc())
-        .limit(n_probe)
-        .collect()
-    )
-    by_term: dict = {}
-    for r in probe_keys:
-        by_term.setdefault(r["term"], []).append(r["first_doc_id"])
-    probe_cond = None
-    for t, firsts in by_term.items():
-        c = (F.col("term") == t) & F.col("first_doc_id").isin(firsts)
-        probe_cond = c if probe_cond is None else (probe_cond | c)
-    probe_blocks = blocks_q.where(probe_cond) if probe_cond is not None else blocks_q.limit(0)
-    probe_rows = _decode_filtered(probe_blocks)
-    if doc_filter is not None:
-        probe_rows = probe_rows.join(doc_filter.select("doc_id"), "doc_id", "left_semi")
-    partial = fold_scores(probe_rows, idfs, avgdl, None)
-    topk_partial = partial.orderBy(F.col("score").desc()).limit(k).collect()
-    theta = topk_partial[-1]["score"] if len(topk_partial) >= k else 0.0
-
-    # MaxScore essential-list split — same shared helper as the driver
-    # flow and the planner; here the split feeds a cluster-side filter.
-    non_essential = maxscore_split(present, gm, theta)
-    essential = [t for t in present if t not in non_essential]
-
-    # keep b(t) iff ub_b + Σ_{t'≠t} gm_{t'} ≥ θ  ⇔  ub_b ≥ θ - (sum_gm - gm_t)
-    gm_col = F.create_map(*[x for t in present for x in (F.lit(t), F.lit(gm[t]))])[
-        F.col("term")
-    ]
-    kept = blocks_q.where(
-        F.col("term").isin(essential)
-        & (F.col("ub") >= F.lit(theta) - (F.lit(sum_gm) - gm_col))
-    )
-
-    cand_df = _decode_filtered(kept).select("doc_id").distinct()
-    if doc_filter is not None:
-        cand_df = cand_df.join(doc_filter.select("doc_id"), "doc_id", "left_semi")
-    cand = cand_df.limit(candidate_cap + 1).collect()
-    if len(cand) > candidate_cap:
-        if stats_out is not None:
-            stats_out["fallback"] = True
-        return _exact_fallback(bidx, present, mode, doc_filter, k, boosts)
-    cand_ids = np.sort(np.array([r["doc_id"] for r in cand], dtype=np.int64))
-    if cand_ids.size == 0:
-        return spark.createDataFrame([], EMPTY_SCORED_SCHEMA)
-    shift = _adaptive_slice_shift(n, cand_ids.size) if slice_shift is None else slice_shift
-    covered = _est_covered_fraction(n, cand_ids.size, shift)
-
-    if stats_out is not None:
-        stats_out.update(
-            fallback=False,
-            theta=float(theta),
-            n_candidates=int(cand_ids.size),
-            blocks_total=blocks_q.count(),
-            blocks_kept=kept.count(),
-            slice_shift=shift,
-            n_essential=len(essential),
-            covered=round(covered, 4),
-        )
-
-    bc = spark.sparkContext.broadcast(cand_ids)
-    scored = _rescore(
-        bidx, blocks_q, present, idfs, avgdl, None, bc, shift, covered, rescore
     )
     return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)

@@ -25,7 +25,7 @@ from nexlt_spark.query.wand import wand_topk
 @pytest.fixture(scope="module")
 def attr_store(spark, index, documents, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("attr_store") / "idx")
-    save_blocked_index(index, path, n_buckets=8, salt_threshold=5, range_shift=6)
+    save_blocked_index(index, path, n_buckets=8, range_shift=6)
     save_doc_attrs(documents, path)
     bidx = load_blocked_index(spark, path)
     assert has_attrs(bidx)
@@ -145,7 +145,7 @@ def test_attr_filter_lowers_without_sidecar(spark, index, documents, tmp_path_fa
     needs the sidecar — so it raises a clear error instead of silently
     ignoring the filter."""
     path = str(tmp_path_factory.mktemp("attr_missing") / "idx")
-    save_blocked_index(index, path, n_buckets=8, salt_threshold=5, range_shift=6)
+    save_blocked_index(index, path, n_buckets=8, range_shift=6)
     bidx = load_blocked_index(spark, path)
     assert not has_attrs(bidx)
     with pytest.raises(RuntimeError, match="doc_attrs"):

@@ -282,10 +282,9 @@ def test_slop_ranged_end_to_end(mini, documents, oracle, pos_index):
 
 
 def test_boost_wand_identical_to_exact(documents, oracle):
-    # boosted WAND (driver skip-data AND legacy cluster-side) must stay
-    # rank- and score-identical to the boosted exact fold: every upper
-    # bound is idf*max_tfnorm, so the single idf multiply keeps the
-    # bounds admissible
+    # boosted WAND must stay rank- and score-identical to the boosted
+    # exact fold: every upper bound is idf*max_tfnorm, so the single idf
+    # multiply keeps the bounds admissible
     from nexlt_spark.index.packed import build_blocked_direct
     from nexlt_spark.query.wand import wand_topk
 
@@ -297,17 +296,13 @@ def test_boost_wand_identical_to_exact(documents, oracle):
     ]
     for terms, mode, boosts in cases:
         want = oracle.topk(Query(terms=terms, mode=mode, boosts=boosts, k=10))
-        for skip_cache in (True, False):
-            got = [
-                (r["doc_id"], r["score"])
-                for r in wand_topk(
-                    ridx, terms, k=10, mode=mode, boosts=boosts,
-                    skip_cache=skip_cache,
-                ).collect()
-            ]
-            assert [d for d, _ in got] == [d for d, _ in want], (terms, mode, skip_cache)
-            for (gd, gs), (wd, ws) in zip(got, want):
-                assert math.isclose(gs, ws, rel_tol=1e-12, abs_tol=1e-15)
+        got = [
+            (r["doc_id"], r["score"])
+            for r in wand_topk(ridx, terms, k=10, mode=mode, boosts=boosts).collect()
+        ]
+        assert [d for d, _ in got] == [d for d, _ in want], (terms, mode)
+        for (gd, gs), (wd, ws) in zip(got, want):
+            assert math.isclose(gs, ws, rel_tol=1e-12, abs_tol=1e-15)
 
 
 def test_boost_planned_topk(documents, oracle):

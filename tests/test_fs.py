@@ -46,7 +46,7 @@ def test_stats_table_remote_branch(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr("nexlt_spark.fs.local_path", lambda _: None)
     p = str(tmp_path / "stats")
-    packed._write_stats_table(spark, p, 7, 123, 16, "standard", True)
+    packed._write_stats_table(spark, p, 7, 123, 16, "standard")
     row = spark.read.parquet(p).collect()[0]
     assert (row["n_docs"], row["total_tokens"], row["n_buckets"]) == (7, 123, 16)
     assert row["analyzer"] == "standard" and row["ranged"] is True

@@ -7,9 +7,11 @@ BENCH.md §6) showed exact wins EVERY shape at 10^6-doc scale (WAND's
 multi-job floor > the whole exact runtime), so at test-corpus scale the
 planner must always say "exact"; the WAND branch is exercised through
 synthetic cached metadata at 10^8-10^9-posting scale, where skipping
-decode volume pays for the orchestration.
+decode volume pays for the fused kernel's θ probe.
 """
 
+import threading
+from collections import OrderedDict
 from types import SimpleNamespace
 
 import pytest
@@ -17,8 +19,9 @@ from pyspark.sql import functions as F
 
 from nexlt_spark.index.packed import build_blocked_direct
 from nexlt_spark.query.exact import paginate, score_postings
+from nexlt_spark.index.blocks import BLOCK_SIZE
+from nexlt_spark.query import planner
 from nexlt_spark.query.planner import (
-    BREAK_EVEN_POSTINGS,
     choose_topk_path,
     estimate_kept_fraction,
     estimate_postings_saved,
@@ -37,7 +40,12 @@ def ranged(documents):
 def _fake_index(n_docs, meta):
     """Planner-visible index stand-in: prefilled TermStates cache + stats.
     choose_topk_path reads nothing else, so no Spark is involved."""
-    return SimpleNamespace(stats=SimpleNamespace(n_docs=n_docs), _term_meta_cache=dict(meta))
+    return SimpleNamespace(
+        stats=SimpleNamespace(n_docs=n_docs, avgdl=100.0),
+        _term_meta_cache=dict(meta),
+        _term_meta_negs=OrderedDict(),
+        _term_meta_negs_lock=threading.Lock(),
+    )
 
 
 def _exact(index, terms, k, mode="or"):
@@ -79,14 +87,16 @@ def test_or_kept_fraction_estimate_sane(ranged):
 
 def test_wand_chosen_at_scale_or():
     # two comparable-idf terms, 300M postings total, block-ub sketch says
-    # ~90% of blocks fall below the θ̂ cut → saved ≈ 270M ≫ break-even
+    # ~90% of blocks fall below the θ̂ cut → saved ≈ 270M ≫ the fused
+    # kernel's θ-probe volume
     meta = {
         "hot": (200_000_000, 1.0, 1_500_000, (0.28, 0.30, 0.35, 0.40, 0.45, 0.50)),
         "warm": (100_000_000, 1.0, 800_000, (0.28, 0.30, 0.35, 0.40, 0.45, 0.50)),
     }
     idx = _fake_index(1_000_000_000, meta)
     saved = estimate_postings_saved(idx, ["hot", "warm"], "or")
-    assert saved is not None and saved > BREAK_EVEN_POSTINGS
+    probe_cost = planner.PROBE_BLOCKS_PER_TERM * BLOCK_SIZE * len(meta)
+    assert saved is not None and saved > probe_cost
     assert choose_topk_path(idx, ["hot", "warm"], 10, "or") == "wand"
 
 
@@ -101,15 +111,32 @@ def test_wand_chosen_at_scale_and_rare_list():
     assert choose_topk_path(idx, ["rare", "hot"], 10, "and") == "wand"
 
 
-def test_and_over_candidate_cap_goes_exact():
-    # rarest list larger than the candidate cap ⇒ WAND would fall back
-    # anyway; planner must not pay the probe just to fall back
+def test_and_over_candidate_cap_goes_exact(monkeypatch):
+    # on the driver plan (a pyarrow-readable store, every term under the
+    # skip cap) a rarest list larger than the candidate cap ⇒ WAND would
+    # fall back anyway; the planner must not pay the probe just to fall
+    # back. The fused kernel has no cap, so the rule is the driver plan's.
     meta = {
         "big1": (600_000, 1.0, 5_000, (0.15, 0.2, 0.25, 0.3, 0.35, 0.4)),
-        "big2": (700_000_000, 1.0, 5_500_000, (0.15, 0.2, 0.25, 0.3, 0.35, 0.4)),
+        "big2": (700_000_000, 1.0, 900_000, (0.15, 0.2, 0.25, 0.3, 0.35, 0.4)),
     }
     idx = _fake_index(1_000_000_000, meta)
+    assert choose_topk_path(idx, ["big1", "big2"], 10, "and") == "wand"  # fused
+    monkeypatch.setattr(planner, "_pa_ds", lambda bidx: object())
     assert choose_topk_path(idx, ["big1", "big2"], 10, "and") == "exact"
+
+
+def test_doc_filter_off_driver_plan_goes_exact():
+    # the fused kernel takes no filter: off the driver plan any filtered
+    # query routes exact, even where pruning would win unfiltered
+    meta = {
+        "rare": (1_000, 1.0, 8, (0.4, 0.5, 0.6, 0.7, 0.8, 0.9)),
+        "hot": (500_000_000, 1.0, 4_000_000, (0.15, 0.2, 0.25, 0.3, 0.35, 0.4)),
+    }
+    idx = _fake_index(1_000_000_000, meta)
+    assert choose_topk_path(idx, ["rare", "hot"], 10, "and") == "wand"
+    for flt in (True, "attr"):
+        assert choose_topk_path(idx, ["rare", "hot"], 10, "and", has_doc_filter=flt) == "exact"
 
 
 def test_flat_idf_or_stays_exact_even_at_scale():
@@ -165,7 +192,7 @@ def test_rehearsed_probe_shared_with_execution(spark, index, tmp_path_factory, m
     from nexlt_spark.query.wand import wand_topk
 
     path = str(tmp_path_factory.mktemp("probe_shared") / "idx")
-    save_blocked_index(index, path, n_buckets=8, salt_threshold=5, range_shift=6)
+    save_blocked_index(index, path, n_buckets=8, range_shift=6)
     bidx = load_blocked_index(spark, path)
 
     calls = {"n": 0}
@@ -190,7 +217,7 @@ def test_topk_rows_equals_topk_dataframe(spark, index, tmp_path_factory):
     from nexlt_spark.query.planner import topk, topk_rows
 
     path = str(tmp_path_factory.mktemp("rows_api") / "idx")
-    save_blocked_index(index, path, n_buckets=8, salt_threshold=5, range_shift=6)
+    save_blocked_index(index, path, n_buckets=8, range_shift=6)
     bidx = load_blocked_index(spark, path)
     shapes = [(["the", "error"], "or", 25), (["run", "file"], "and", 10), (["the"], "or", 5)]
     for terms, mode, k in shapes:  # warm caches

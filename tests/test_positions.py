@@ -140,7 +140,7 @@ def _pos_map(df):
 def test_blocked_positions_roundtrip_and_phrase(pos_index, documents):
     from nexlt_spark.index.blocks import BlockedIndex, build_blocks, decode_terms
 
-    blocks = build_blocks(pos_index, salt_threshold=50, range_shift=4, block_size=8)
+    blocks = build_blocks(pos_index, range_shift=4, block_size=8)
     assert "pos" in blocks.columns
     bidx = BlockedIndex(
         blocks=blocks.persist(),
@@ -152,7 +152,7 @@ def test_blocked_positions_roundtrip_and_phrase(pos_index, documents):
     terms = ["the", "run", "file"]
     got = _pos_map(decode_terms(blocks, terms, positions=True))
     want = _pos_map(pos_index.postings.where(F.col("term").isin(terms)))
-    assert got == want  # multi-block, range-salted lists decode identically
+    assert got == want  # multi-block, range-partitioned lists decode identically
     # phrase through the blocked index == through the flat index
     for ph in ["the run", "run the", "the the"]:
         toks = tokenize(ph)

@@ -249,3 +249,21 @@ def test_sharded_rows_exact_fallback_keeps_global_stats(disk_shards):
     got = sharded_topk_rows(shards, ["the", "error"], k=15, candidate_cap=1)
     want = wand_topk(gstore, ["the", "error"], k=15, as_rows=True)
     assert got == want
+
+
+def test_global_view_shares_store_caches_before_any_query():
+    """A never-queried shard's global-stats view aliases the shard's
+    store-byte caches, so the view never builds a second decoded-block
+    budget; its term-meta cache (seeded with global df) stays its own."""
+    from nexlt_spark.index.blocks import BlockedIndex
+    from nexlt_spark.index.build import IndexStats
+    from nexlt_spark.index.sharded import _global_view
+
+    shard = BlockedIndex(
+        blocks=None, doc_stats=None, term_stats=None,
+        stats=IndexStats(n_docs=10, total_tokens=100),
+    )
+    view = _global_view(shard, IndexStats(n_docs=30, total_tokens=300))
+    for attr in ("_decoded_block_cache", "_skip_cache", "_theta_probe_cache"):
+        assert getattr(view, attr) is getattr(shard, attr), attr
+    assert view._term_meta_cache is not shard._term_meta_cache

@@ -2,14 +2,15 @@
 
 The M4 contract (SURVEY.md §7.2): the WAND fast path must return
 rank-identical (doc_id, score) top-k versus the exact column-algebra
-path for every query shape, on both unsalted and heavily-salted blocked
-indexes — while actually skipping block decodes when θ allows.
+path for every query shape, on coarse- and fine-ranged blocked indexes,
+in memory (the fused plan) and on disk (the driver plan) — while
+actually skipping block decodes when θ allows.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
-from nexlt_spark.index.blocks import BlockedIndex, build_blocks
+from nexlt_spark.index.blocks import BlockedIndex, build_blocks, load_blocked_index
 from nexlt_spark.query.exact import paginate, score_postings
 from nexlt_spark.query.wand import _bucket, wand_topk
 
@@ -17,7 +18,18 @@ from nexlt_spark.query.wand import _bucket, wand_topk
 @pytest.fixture(scope="module")
 def blocked(index):
     return BlockedIndex(
-        blocks=build_blocks(index, salt_threshold=10**9).persist(),
+        blocks=build_blocks(index).persist(),
+        doc_stats=index.doc_stats,
+        term_stats=index.term_stats,
+        stats=index.stats,
+    )
+
+
+def _fine_blocked(index):
+    # tiny block_size + 64-doc ranges: many blocks even on the test
+    # corpus, so θ-pruning has something to skip
+    return BlockedIndex(
+        blocks=build_blocks(index, range_shift=6, block_size=16),
         doc_stats=index.doc_stats,
         term_stats=index.term_stats,
         stats=index.stats,
@@ -25,15 +37,21 @@ def blocked(index):
 
 
 @pytest.fixture(scope="module")
-def blocked_salted(index):
-    # tiny block_size + low threshold: many blocks even on the test corpus,
-    # so θ-pruning has something to skip
-    return BlockedIndex(
-        blocks=build_blocks(index, salt_threshold=5, range_shift=6, block_size=16).persist(),
-        doc_stats=index.doc_stats,
-        term_stats=index.term_stats,
-        stats=index.stats,
-    )
+def blocked_fine(index):
+    b = _fine_blocked(index)
+    b.blocks = b.blocks.persist()
+    return b
+
+
+@pytest.fixture(scope="module")
+def blocked_store(spark, index, tmp_path_factory):
+    """The fine layout saved and reloaded: on-disk stores take the
+    driver plan, whose pruning telemetry these tests assert."""
+    from nexlt_spark.index.packed import save_blocked
+
+    path = str(tmp_path_factory.mktemp("wand_fine_store") / "idx")
+    save_blocked(_fine_blocked(index), path, n_buckets=8)
+    return load_blocked_index(spark, path)
 
 
 def _exact_topk(index, terms, k, mode="or", doc_filter=None):
@@ -69,8 +87,8 @@ def test_wand_equals_exact(index, blocked, terms, mode, k):
 
 
 @pytest.mark.parametrize("terms,mode,k", QUERIES)
-def test_wand_equals_exact_salted(index, blocked_salted, terms, mode, k):
-    assert _wand(blocked_salted, terms, k, mode) == _exact_topk(index, terms, k, mode)
+def test_wand_equals_exact_salted(index, blocked_fine, terms, mode, k):
+    assert _wand(blocked_fine, terms, k, mode) == _exact_topk(index, terms, k, mode)
 
 
 def test_wand_with_doc_filter(index, blocked, documents):
@@ -83,38 +101,58 @@ def test_wand_with_doc_filter(index, blocked, documents):
     )
 
 
-def test_wand_candidate_cap_fallback(index, blocked):
+def test_wand_candidate_cap_fallback(index, blocked_store):
     stats = {}
-    got = _wand(blocked, ["the", "error"], 10, "or", candidate_cap=3, stats_out=stats)
+    got = _wand(blocked_store, ["the", "error"], 10, "or", candidate_cap=3, stats_out=stats)
     assert stats.get("fallback") is True
     assert got == _exact_topk(index, ["the", "error"], 10, "or")
 
 
-def test_wand_actually_prunes(blocked_salted):
+def test_wand_actually_prunes(blocked_store):
     """On a Zipf corpus with 16-doc blocks, a rare+hot OR query must
     establish θ high enough to skip some of the hot term's blocks."""
     stats = {}
-    _wand(blocked_salted, ["the", "w1998"], 3, "or", stats_out=stats)
+    _wand(blocked_store, ["the", "w1998"], 3, "or", stats_out=stats)
     assert stats["fallback"] is False
     assert stats["theta"] > 0.0
     assert stats["blocks_kept"] < stats["blocks_total"], stats
 
 
-@pytest.mark.parametrize("terms,mode,k", [
+RESCORE_SHAPES = [
     (["run", "file"], "and", 10),
     (["spark", "index", "merge"], "or", 10),
     (["the", "error"], "or", 25),
-])
-def test_wand_rows_rescore_equals_exact(index, blocked_salted, terms, mode, k):
+]
+
+
+@pytest.mark.parametrize("terms,mode,k", RESCORE_SHAPES)
+def test_wand_rows_rescore_equals_exact(index, blocked_store, terms, mode, k, monkeypatch):
     """The shuffle-free rows rescore (sparse-candidate plan at scale,
-    forced here) is rank- and score-identical to the ranged kernel and
-    the exact path."""
-    assert _wand(blocked_salted, terms, k, mode, rescore="rows") == _exact_topk(
-        index, terms, k, mode
-    )
+    forced here past the driver decode caps and the coverage threshold)
+    is rank- and score-identical to the exact path."""
+    _assert_cluster_rescore(index, blocked_store, terms, mode, k, monkeypatch, "rows")
 
 
-def test_wand_maxscore_essential_split(index, blocked_salted):
+@pytest.mark.parametrize("terms,mode,k", RESCORE_SHAPES)
+def test_wand_ranged_rescore_equals_exact(index, blocked_store, terms, mode, k, monkeypatch):
+    """The dense-candidate rescore (candidate-masked per-range kernel,
+    forced here the same way) is rank- and score-identical too."""
+    _assert_cluster_rescore(index, blocked_store, terms, mode, k, monkeypatch, "ranged")
+
+
+def _assert_cluster_rescore(index, bidx, terms, mode, k, monkeypatch, plan):
+    import nexlt_spark.query.wand as W
+
+    monkeypatch.setattr(W, "DRIVER_DECODE_MAX_BLOCKS", 0)
+    monkeypatch.setattr(W, "DRIVER_DECODE_MAX_POSTINGS", 0)
+    monkeypatch.setattr(W, "ROWS_RESCORE_COVERAGE", 1.01 if plan == "rows" else 0.0)
+    stats = {}
+    got = _wand(bidx, terms, k, mode, stats_out=stats)
+    assert stats["rescore_plan"] == plan, stats
+    assert got == _exact_topk(index, terms, k, mode)
+
+
+def test_wand_maxscore_essential_split(index, blocked_store):
     """OR of a rare high-idf term with the hottest term: θ from the rare
     probes exceeds the hot term's gm, so MaxScore marks the hot list
     non-essential — candidates come from the rare list alone (no hot
@@ -125,7 +163,7 @@ def test_wand_maxscore_essential_split(index, blocked_salted):
     ).limit(1).collect()[0]
     terms = ["the", rare["term"]]
     stats = {}
-    got = _wand(blocked_salted, terms, 3, "or", stats_out=stats)
+    got = _wand(blocked_store, terms, 3, "or", stats_out=stats)
     assert got == _exact_topk(index, terms, 3, "or")
     assert stats["fallback"] is False
     assert stats["n_essential"] == 1, stats
@@ -144,22 +182,7 @@ def test_bucket_parity_spark_vs_python(spark, index):
         assert _bucket(t, 32) == got[t]
 
 
-@pytest.mark.parametrize("terms,mode,k", [
-    (["run", "file"], "and", 10),
-    (["run", "file"], "or", 10),
-    (["the", "error"], "or", 25),
-    (["spark", "index", "merge"], "or", 10),
-])
-def test_wand_spark_plan_equals_exact(index, blocked_salted, terms, mode, k):
-    """The legacy cluster-side pruning flow (what over-cap head terms at
-    10^10+ docs route through) stays rank-identical when forced."""
-    stats = {}
-    got = _wand(blocked_salted, terms, k, mode, stats_out=stats, skip_cache=False)
-    assert stats["plan"] == "spark"
-    assert got == _exact_topk(index, terms, k, mode)
-
-
-def test_wand_driver_plan_is_default_and_counts_blocks(blocked_salted, index):
+def test_wand_driver_plan_is_default_and_counts_blocks(blocked_store, index):
     """Small-cap terms serve from driver-resident skip data: the plan is
     'driver', pruning telemetry is filled without Spark count jobs, and
     the rescore reads only candidate-intersecting blocks."""
@@ -168,23 +191,23 @@ def test_wand_driver_plan_is_default_and_counts_blocks(blocked_salted, index):
     ).limit(1).collect()[0]["term"]
     terms = ["the", rare]
     stats = {}
-    got = _wand(blocked_salted, terms, 3, "or", stats_out=stats)
+    got = _wand(blocked_store, terms, 3, "or", stats_out=stats)
     assert stats["plan"] == "driver"
     assert got == _exact_topk(index, terms, 3, "or")
     assert stats["rescore_blocks"] <= stats["blocks_total"], stats
     # skip data is memoized on the index: present terms are cached, so a
     # repeat query fetches no new metadata
-    assert set(terms) <= set(blocked_salted._skip_cache)
+    assert set(terms) <= set(blocked_store._skip_cache)
 
 
 def test_wand_on_disk_store_pyarrow_path(spark, index, tmp_path_factory):
     """An on-disk store serves WAND through driver-side pyarrow reads
     (store_path set by load_blocked_index) — rank/score identity vs the
     exact path, zero Spark jobs for metadata/skip/payload fetches."""
-    from nexlt_spark.index.blocks import load_blocked_index, save_blocked_index
+    from nexlt_spark.index.blocks import save_blocked_index
 
     path = str(tmp_path_factory.mktemp("wand_store") / "idx")
-    save_blocked_index(index, path, n_buckets=8, salt_threshold=5, range_shift=6)
+    save_blocked_index(index, path, n_buckets=8, range_shift=6)
     bidx = load_blocked_index(spark, path)
     assert bidx.store_path == path
     for terms, mode, k in [(["run", "file"], "and", 10), (["the", "error"], "or", 25)]:
@@ -202,10 +225,10 @@ def test_wand_driver_plan_zero_spark_jobs(spark, index, tmp_path_factory):
     planning + pruning + payload fetch schedule ZERO Spark jobs — block
     payloads come back through pyarrow dataset reads — and materializing
     the ≤k-row local answer costs at most one job."""
-    from nexlt_spark.index.blocks import load_blocked_index, save_blocked_index
+    from nexlt_spark.index.blocks import save_blocked_index
 
     path = str(tmp_path_factory.mktemp("wand_zerojob") / "idx")
-    save_blocked_index(index, path, n_buckets=8, salt_threshold=5, range_shift=6)
+    save_blocked_index(index, path, n_buckets=8, range_shift=6)
     bidx = load_blocked_index(spark, path)
     shapes = [(["run", "file"], "and", 10), (["the", "error"], "or", 25)]
     for terms, mode, k in shapes:  # warm metadata + skip caches
@@ -279,16 +302,39 @@ def test_wand_fused_forced_overcap(index, ranged_packed, monkeypatch):
     import nexlt_spark.query.wand as W
 
     monkeypatch.setattr(W, "SKIP_CACHE_MAX_BLOCKS", 0)
-    # per-test caches: the shared fixture's memoized metadata was built
-    # under the real cap
-    ranged_packed._term_meta_cache = {}
-    ranged_packed._term_meta_negs = None
+    _fresh_meta_caches(ranged_packed, monkeypatch)
     stats = {}
     got = _wand(ranged_packed, ["the", "error"], 25, "or", stats_out=stats)
     assert stats["spark_plan"] == "fused"
     assert got == _exact_topk(index, ["the", "error"], 25, "or")
-    ranged_packed._term_meta_cache = {}
-    ranged_packed._term_meta_negs = None
+
+
+def _fresh_meta_caches(bidx, monkeypatch):
+    """Per-test term-metadata caches (restored after the test): the
+    shared fixture's memoized metadata was built under the real cap."""
+    from collections import OrderedDict
+
+    import nexlt_spark.query.wand as W
+    from nexlt_spark.lru import ByteLRU
+
+    monkeypatch.setattr(bidx, "_term_meta_cache", ByteLRU(lambda: W._META_CACHE_MAX_BYTES))
+    monkeypatch.setattr(bidx, "_term_meta_negs", OrderedDict())
+
+
+def test_wand_overcap_doc_filter_goes_exact(index, ranged_packed, documents, monkeypatch):
+    """Off the driver plan the fused kernel takes no filter: an over-cap
+    query with a DataFrame doc_filter runs the filtered exact per-range
+    plan, rank-identical to filtered exact."""
+    import nexlt_spark.query.wand as W
+
+    monkeypatch.setattr(W, "SKIP_CACHE_MAX_BLOCKS", 0)
+    _fresh_meta_caches(ranged_packed, monkeypatch)
+    flt = documents.where(F.col("role") == "user").select("doc_id")
+    for terms, mode in [(["error", "run"], "or"), (["the", "run"], "and")]:
+        stats = {}
+        got = _wand(ranged_packed, terms, 10, mode, flt, stats_out=stats)
+        assert stats["spark_plan"] == "exact", (terms, mode)
+        assert got == _exact_topk(index, terms, 10, mode, flt)
 
 
 def test_decoded_block_lru_serves_repeats(spark, index, tmp_path_factory, monkeypatch):
@@ -296,10 +342,10 @@ def test_decoded_block_lru_serves_repeats(spark, index, tmp_path_factory, monkey
     repeat query must hit it (no new entries), return identical results,
     and eviction must keep the byte budget."""
     import nexlt_spark.query.wand as W
-    from nexlt_spark.index.blocks import load_blocked_index, save_blocked_index
+    from nexlt_spark.index.blocks import save_blocked_index
 
     path = str(tmp_path_factory.mktemp("wand_lru") / "idx")
-    save_blocked_index(index, path, n_buckets=8, salt_threshold=5, range_shift=6)
+    save_blocked_index(index, path, n_buckets=8, range_shift=6)
     bidx = load_blocked_index(spark, path)
     got1 = _wand(bidx, ["the", "error"], 25, "or")
     cache = bidx._decoded_block_cache

@@ -20,7 +20,7 @@ import argparse
 import io
 import os
 import sys
-from contextlib import redirect_stdout
+from contextlib import contextmanager, redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -59,15 +59,16 @@ per-range top-(start+k) truncation preserves the global order only up
 to the first page, so deep cursor pages must see every scored row.
 Also asserted in `tests/test_cursor.py::test_cursor_page_plan_is_take_ordered`.""",
     "WAND default plan: driver skip-data, zero cluster-side pruning": """\
-`wand_topk`'s default (`skip_cache=True`) serves from driver-resident
-skip data whenever every present term's block count fits the cache cap:
+`wand_topk` serves an on-disk store from driver-resident skip data
+whenever every present term's block count fits the cache cap:
 block selection, θ maintenance, and pruning are driver-side numpy; the
 only Spark jobs read key-selected block rows. The RESULT DataFrame is
 therefore a `LocalTableScan` — the scores are already resident, and a
 serving node answers follow-up pages without any further cluster work
-(BENCH.md §2's QPS table measures this route at p50 ≈ 85 ms). The cluster-side flow
-below stays available for over-cap terms and is what a 10^12-doc head
-term would route through.""",
+(BENCH.md §2's QPS table measures this route at p50 ≈ 85 ms). A
+10^12-doc head term past the cap takes the fused per-range kernel
+instead (one grouped job); the two sections below are the cluster-side
+rescores the driver plan falls back to past its decode caps.""",
     "Training-data quality ops: repetition signals, boilerplate strip, contamination": """\
 Audited live on the documents table (AQE on — join strategies that are
 size-based at this scale are called out as such):
@@ -100,6 +101,21 @@ size-based at this scale are called out as such):
   by doc_id with map-side partial counts. Also asserted in
   `tests/test_contamination.py`.""",
 }
+
+
+@contextmanager
+def _wand_knobs(**values):
+    """Temporarily set query.wand module constants (route thresholds)."""
+    import nexlt_spark.query.wand as W
+
+    saved = {k: getattr(W, k) for k in values}
+    for k, v in values.items():
+        setattr(W, k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            setattr(W, k, v)
 
 
 def main() -> None:
@@ -331,9 +347,12 @@ def main() -> None:
         )
     )
 
-    # skip_cache=False forces the cluster-side flow (what an over-cap
-    # head term routes through at 10^12 docs)
-    q10 = wand_topk(bidx, ["spark", "join"], k=10, mode="or", skip_cache=False)
+    # a driver-plan rescore past the driver decode caps runs on the
+    # cluster (what a broad query at 10^12 docs does); the small plan
+    # corpus fits the caps, so they are lowered here. Dense candidates →
+    # the candidate-masked per-range kernel
+    with _wand_knobs(DRIVER_DECODE_MAX_BLOCKS=0, ROWS_RESCORE_COVERAGE=0.0):
+        q10 = wand_topk(bidx, ["spark", "join"], k=10, mode="or")
     sections.append(
         (
             "WAND rescore on the ranged store (candidate-masked kernel, dense candidates)",
@@ -345,11 +364,12 @@ def main() -> None:
 
     # sparse candidates (the 10^7+-doc WAND design case): the rescore's
     # rows plan decodes+masks in place on the scan — NO groupBy exchange
-    # of block payloads; only masked posting rows reach the fold. Forced
-    # here with rescore="rows" (the small plan corpus makes every slice
-    # coverage look dense otherwise); at scale the auto rule picks this
-    # plan whenever candidate slices cover <30% of the docID space.
-    q10b = wand_topk(bidx, ["table", "scan"], k=10, mode="and", rescore="rows")
+    # of block payloads; only masked posting rows reach the fold. At scale
+    # wand_topk picks it whenever candidate-hit blocks hold <30% of the
+    # query's postings; the small plan corpus looks dense, so the
+    # coverage threshold is raised here.
+    with _wand_knobs(DRIVER_DECODE_MAX_BLOCKS=0, ROWS_RESCORE_COVERAGE=1.01):
+        q10b = wand_topk(bidx, ["table", "scan"], k=10, mode="and")
     sections.append(
         (
             "WAND rescore, sparse candidates: shuffle-free rows plan (no payload exchange)",
